@@ -11,8 +11,8 @@ from .text import (  # noqa: F401
     stopword_count,
 )
 from .similarity import dot, cosine, lsh_planes, lsh_bucket  # noqa: F401
+from .skew import hot_keys  # noqa: F401
 from .sessionize import (  # noqa: F401
-    estimate_top_key_share,
     sessionize,
     sessionize_bucketed,
     sessionize_plain,

@@ -2,15 +2,15 @@
 frame-fold family (EWMA, rolling median — any operator whose per-row
 answer is a function of the last L values per key).
 
-The plain shape (`c_ewma`, `c_window_rolling_median`) is one
-user-keyed window — optimal on uniform keys, measured degrading 4.3×
-when one user owns 30% of the event log (adversarial-skew probe,
-round 9): the frame fold itself is constant work per row, but the hot
+The plain shape (`frame_values_plain`, under `c_ewma` and
+`c_window_rolling_median`) is one user-keyed window — optimal on
+uniform keys, measured degrading 4.3× when one user owns 30% of the
+event log (adversarial-skew probe, round 9): the frame fold itself is constant work per row, but the hot
 partition is one task-sized sort, the same exposure class lagstitch/
 sessionize/scd2 closed.
 
 This module generalizes `lagstitch`'s single-row carry to an
-(L−1)-row carry:
+(L−1)-row carry, on the shared scan (`skew.bucket_scan`):
 
 1. LOCAL. Bucket the order key into fixed ranges; a local frame
    collect answers every row that sits ≥ L rows into its bucket.
@@ -28,12 +28,6 @@ This module generalizes `lagstitch`'s single-row carry to an
    because carry is precisely the ≤ L−1 values the local window
    can't see.
 
-Shuffle inventory (the lagstitch accounting): one (user, bucket)
-exchange for the local window, one partial-agg summary rollup, one
-bounded window over the summary, one equi-join back (null-safe on the
-user key — NULL keys are their own partition in the plain window and
-must not drop). A hot user cannot flood any of them.
-
 Differential discipline: `c_ewma_bucketed` / `c_ewma_adaptive` and
 the rolling-median twins check these implementations against the SAME
 plain-window oracle SQL as their plain queries, plus boundary tests in
@@ -47,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .sessionize import DEFAULT_SKEW_THRESHOLD, hot_keys
+from .skew import bucket_scan, hot_keys, hot_split
 
 DEFAULT_BUCKET_ROWS = 65536
 
@@ -62,45 +56,38 @@ def frame_values_bucketed(
     frame_len: int,
     bucket_rows: int = DEFAULT_BUCKET_ROWS,
 ) -> DataFrame:
-    """(user_id, event_id, x_micro, frame) with `frame` = the last
-    `frame_len` x_micro values (oldest first, current row included),
-    per user by event_id — the skew-resistant form."""
+    """The `frame_values_plain` contract without the hot-key window."""
     L = frame_len
-    e = events.select("user_id", "event_id", "x_micro").withColumn(
-        "__b", F.expr(f"event_id DIV {bucket_rows}")
+    scanned = bucket_scan(
+        events.select("user_id", "event_id", "x_micro"),
+        "user_id",
+        F.expr(f"event_id DIV {bucket_rows}"),
+        ["event_id"],
+        lambda w: {
+            "__loc": F.collect_list("x_micro").over(
+                w.rowsBetween(-(L - 1), Window.currentRow)
+            )
+        },
+        [
+            _tail(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("event_id", "x_micro"))),
+                    lambda s: s.x_micro,
+                ),
+                L - 1,
+            ).alias("__tail")
+        ],
+        lambda w: {
+            "__carry": _tail(
+                F.flatten(
+                    F.collect_list("__tail").over(w.rowsBetween(-(L - 1), -1))
+                ),
+                L - 1,
+            )
+        },
+        null_safe_bucket=False,
     )
-    w_local = (
-        Window.partitionBy("user_id", "__b")
-        .orderBy("event_id")
-        .rowsBetween(-(L - 1), Window.currentRow)
-    )
-    loc = e.withColumn("__loc", F.collect_list("x_micro").over(w_local))
-    summ = e.groupBy("user_id", "__b").agg(
-        _tail(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("event_id", "x_micro"))),
-                lambda s: s.x_micro,
-            ),
-            L - 1,
-        ).alias("__tail")
-    )
-    w_user = (
-        Window.partitionBy("user_id")
-        .orderBy("__b")
-        .rowsBetween(-(L - 1), -1)
-    )
-    carry = summ.select(
-        F.col("user_id").alias("__ck"),
-        F.col("__b").alias("__cb"),
-        _tail(F.flatten(F.collect_list("__tail").over(w_user)), L - 1).alias(
-            "__carry"
-        ),
-    )
-    return loc.join(
-        carry,
-        F.col("user_id").eqNullSafe(F.col("__ck"))
-        & (F.col("__b") == F.col("__cb")),
-    ).select(
+    return scanned.select(
         "user_id",
         "event_id",
         "x_micro",
@@ -120,7 +107,9 @@ def frame_values_bucketed(
 
 
 def frame_values_plain(events: DataFrame, frame_len: int) -> DataFrame:
-    """The plain one-window twin (hot partition = one task)."""
+    """(user_id, event_id, x_micro, frame) with `frame` = the last
+    `frame_len` x_micro values (oldest first, current row included),
+    per user by event_id: one user-keyed window."""
     w = (
         Window.partitionBy("user_id")
         .orderBy("event_id")
@@ -138,28 +127,24 @@ def frame_values(
     events: DataFrame,
     frame_len: int,
     bucket_rows: int = DEFAULT_BUCKET_ROWS,
-    skew_threshold: float = DEFAULT_SKEW_THRESHOLD,
     hot: list | None = None,
 ) -> DataFrame:
-    """ADAPTIVE entry point — the hot/cold split (functions/asof.py
-    for the measured rationale): hot keys' rows ride the stitch,
-    everything else the plain window; shapes are oracle-proven equal
-    so dispatch changes the plan, never the answer. Pass `hot` to
-    skip the probe ([] forces plain)."""
-    if hot is None:
-        hot = hot_keys(events, "user_id", threshold=skew_threshold)
-    if not hot:
-        return frame_values_plain(events, frame_len)
-    is_hot = F.coalesce(F.col("user_id").isin(hot), F.lit(False))
-    cold = frame_values_plain(events.filter(~is_hot), frame_len)
-    hot_df = frame_values_bucketed(
-        events.filter(is_hot), frame_len, bucket_rows=bucket_rows
+    """Adaptive entry point: hot users' rows through bucket-and-stitch,
+    everyone else through the plain window. Pass `hot` to skip the
+    probe ([] forces plain)."""
+    return hot_split(
+        lambda cut: frame_values_plain(cut(events, "user_id"), frame_len),
+        lambda cut: frame_values_bucketed(
+            cut(events, "user_id"), frame_len, bucket_rows=bucket_rows
+        ),
+        hot_keys(events) if hot is None else hot,
     )
-    return cold.unionByName(hot_df)
 
 
 def ewma_from_frame(df: DataFrame) -> DataFrame:
-    """c_ewma's exact integer arithmetic over a `frame` column."""
+    """Exact integer EWMA (decay 1/2 per step) over a `frame` column:
+    the fold weights the oldest value 2^0, so num and den are exact
+    integers and `ewma_pico` = (num·10^6) DIV den."""
     num = F.aggregate(
         F.col("frame"),
         F.struct(
@@ -181,6 +166,9 @@ def ewma_from_frame(df: DataFrame) -> DataFrame:
         "user_id",
         "event_id",
         "x_micro",
+        # DECIMAL(38,0) widening before the ×10^6 so no corpus's value
+        # range can wrap the product; `div` truncates and `//` floors,
+        # identical here because x_micro (and so num) is non-negative.
         F.expr(
             "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
         ).alias("ewma_pico"),
@@ -188,7 +176,8 @@ def ewma_from_frame(df: DataFrame) -> DataFrame:
 
 
 def rolling_median_from_frame(df: DataFrame) -> DataFrame:
-    """c_window_rolling_median's exact 2×-median over a `frame`."""
+    """Exact rolling median over a `frame` column, emitted as twice the
+    median (`med2_micro`) so the even-frame midpoint stays an integer."""
     s = F.array_sort("frame")
     n = F.size(s)
     med2 = (

@@ -99,8 +99,6 @@ _EXTERNALLY_VERIFIED: dict[str, str] = {
     "c_agg_median": "f3ef539873f7",
     "c_agg_rollup": "765865e30887",
     "c_agg_stats": "b391a506b3fa",
-    "c_anomaly_adaptive": "06bec76e6fd8",
-    "c_anomaly_ewma": "4f694c5c9de6",
     "c_array_explode": "9f1dbfe3b644",
     "c_array_ops": "d81fb5f2836c",
     "c_audience_overlap": "f5b9782fcdcf",
@@ -111,9 +109,6 @@ _EXTERNALLY_VERIFIED: dict[str, str] = {
     "c_data_skew_gini": "ae8afce6409b",
     "c_date_spine": "98cd1ded2db9",
     "c_dq_audit": "bf7eb26be4de",
-    "c_ewma": "41eb406e35b7",
-    "c_ewma_adaptive": "6961c957b237",
-    "c_ewma_bucketed": "6630b93fa05d",
     "c_except": "5e614d169e59",
     "c_funnel_steps": "0ead0b6a7694",
     "c_funnel_time": "3492cf8c6900",
@@ -124,9 +119,6 @@ _EXTERNALLY_VERIFIED: dict[str, str] = {
     "c_histogram_equidepth_sketch": "57a1edc98cfe",
     "c_intersect": "3126960e92d0",
     "c_join_anti": "7f225a0e0e93",
-    "c_join_asof": "2ece0fe29b80",
-    "c_join_asof_adaptive": "a6d6519d6185",
-    "c_join_asof_bucketed": "ef7aaf419f97",
     "c_join_bloom": "a84536062fc5",
     "c_join_cardinality": "e6d317edc1dd",
     "c_join_equi": "e7c9d85b0403",
@@ -147,20 +139,12 @@ _EXTERNALLY_VERIFIED: dict[str, str] = {
     "c_period_over_period": "218e0ef264f9",
     "c_pivot": "62cd420661d4",
     "c_retention_cohorts": "5b2ccc515f5c",
-    "c_rolling_median_adaptive": "a845415348d4",
-    "c_rolling_median_bucketed": "71cf92a9bc94",
     "c_scalar_date": "e675135d79fd",
     "c_scalar_interval": "ca96473425e7",
     "c_scalar_math": "8aba0868eed0",
     "c_scalar_regex": "09a66d7d8d25",
     "c_scalar_string": "60d59baecc97",
     "c_scan_parquet": "5812ed9ae230",
-    "c_scd2_adaptive": "9e965e7b2d7f",
-    "c_scd2_bucketed": "7fda824998ff",
-    "c_scd2_intervals": "0ba75e8ed69f",
-    "c_sessionize_adaptive": "f5114c796a83",
-    "c_sessionize_bucketed": "505d175e7430",
-    "c_sessionize_gaps": "053f2be93d5d",
     "c_sessionize_stats": "02ced7eb24ab",
     "c_share_of_parent": "4c3a6b47573d",
     "c_skew_report": "9da75c279286",
@@ -201,15 +185,11 @@ _EXTERNALLY_VERIFIED: dict[str, str] = {
     "c_window_bollinger": "c9a5e23816a8",
     "c_window_drawdown": "4862c49dd9e2",
     "c_window_first_last": "4ad63963c057",
-    "c_window_lag": "ffb4771a1d99",
-    "c_window_lag_adaptive": "281db0524313",
-    "c_window_lag_bucketed": "691b262d0e9f",
     "c_window_ntile": "7b3713d583c0",
     "c_window_percentiles": "5c7432cd9757",
     "c_window_range_frame": "11c9a0f7aabe",
     "c_window_rank": "6622e7a7335c",
     "c_window_rank_variants": "b7ce564997b6",
-    "c_window_rolling_median": "40595a0732d3",
     "c_window_running_sum": "cf0cff130489",
     "c_zonemap_prune": "f0c5f0cbcf6e",
     "c_zonemap_scan": "1efef0812a5e",

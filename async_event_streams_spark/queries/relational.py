@@ -26,6 +26,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 from pyspark.sql.window import Window
 
+from ..functions.asof import (
+    asof_orderkey,
+    asof_orderkey_bucketed,
+    asof_orderkey_plain,
+)
+from ..functions.framestitch import (
+    ewma_from_frame,
+    frame_values,
+    frame_values_bucketed,
+    frame_values_plain,
+    rolling_median_from_frame,
+)
+from ..functions.lagstitch import lag_prev, lag_prev_bucketed, lag_prev_plain
+from ..functions.scd2 import (
+    scd2_intervals,
+    scd2_intervals_bucketed,
+    scd2_intervals_plain,
+)
+from ..functions.sessionize import (
+    sessionize,
+    sessionize_bucketed,
+    sessionize_plain,
+)
+from ..functions.skew import hot_key_profile, hot_split
 from ..tables import table
 from ..util import artifact, materialize
 from . import query
@@ -932,69 +956,33 @@ def c_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_join_asof",
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
+# The as-of, LAG, sessionize and SCD2 families each share ONE oracle
+# between their plain, bucketed and adaptive queries: the oracle states
+# the simple semantics, so the differential check proves
+# bucket-and-stitch and the hot/cold split ≡ the plain shape.
+_ASOF_ORACLE = (
+    "SELECT e.event_id, e.user_id, "
+    "(SELECT o.o_orderkey FROM orders o "
+    " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
+    " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
+    "FROM events e"
 )
+
+
+@query("c_join_asof", oracle=_ASOF_ORACLE)
 def c_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (each event ⋈ latest prior order of the same user),
-    Spark-native via the union + last-non-null-window technique: tag both
-    sides, union, and carry the most recent order key forward within each
-    user's timeline. ONE shuffle on the join key — no row explosion, no
-    range cross-product — which is the 100 TB-safe as-of strategy.
-    Ties (equal o_orderdate) break toward the larger o_orderkey."""
-    events = table(spark, sf_dir, "events")
-    orders = table(spark, sf_dir, "orders")
-    e = events.select(
-        F.col("user_id").alias("k"),
-        F.col("ts").alias("t"),
-        F.lit(1).alias("is_event"),
-        F.col("event_id"),
-        F.lit(None).cast("long").alias("o_key"),
-    )
-    o = orders.select(
-        F.col("o_custkey").alias("k"),
-        F.col("o_orderdate").alias("t"),
-        F.lit(0).alias("is_event"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderkey").alias("o_key"),
-    )
-    # Orders sort before events at the same timestamp (<= semantics); among
-    # equal-time orders the larger key sorts last, so last() picks it.
-    w = (
-        Window.partitionBy("k")
-        .orderBy("t", "is_event", "o_key")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    merged = e.unionByName(o).withColumn(
-        "asof_orderkey", F.last("o_key", ignorenulls=True).over(w)
-    )
-    return merged.filter(F.col("is_event") == 1).select(
-        "event_id", F.col("k").alias("user_id"), "asof_orderkey"
+    Spark-native via the union + last-non-null-window technique
+    (functions/asof.asof_orderkey_plain): ONE shuffle on the join key —
+    no row explosion, no range cross-product — which is the 100 TB-safe
+    as-of strategy. Ties (equal o_orderdate) break toward the larger
+    o_orderkey."""
+    return asof_orderkey_plain(
+        table(spark, sf_dir, "events"), table(spark, sf_dir, "orders")
     )
 
 
-@query(
-    "c_join_asof_bucketed",
-    # Same oracle SQL as c_join_asof ON PURPOSE: the oracle states the
-    # simple semantics (latest prior order per event, correlated
-    # subquery); the Spark side is the skew-resistant bucket-and-stitch
-    # implementation, so the differential check proves it ≡ the plain
-    # as-of join.
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
-)
+@query("c_join_asof_bucketed", oracle=_ASOF_ORACLE)
 def c_join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant as-of join (functions/asof.py): the same output
     contract as c_join_asof — each event ⋈ latest prior order of the
@@ -1003,54 +991,27 @@ def c_join_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeline. The plain union+window shape serializes a 30%-hot
     user's entire timeline through one task (1.7–2.2× measured on the
     r7 skew lane, worse with more executors, and AQE cannot split a
-    window partition); here the corpus-sized exchanges are keyed
-    (user, bucket) and the stitch is a segmented running
-    last-non-null: a per-bucket summary carries each bucket's closing
-    order and an ignore-nulls backward LAST over the tiny user-keyed
-    summary window yields every bucket's carry-in. See the module
-    docstring for the boundary argument and tools/skew_probe.py for
-    the measured comparison; `functions/asof.asof_orderkey` is the
-    ADAPTIVE entry point dispatching plain-vs-bucketed off the same
-    top-key-share probe as sessionize/SCD2."""
-    from ..functions.asof import asof_orderkey_bucketed
-
+    window partition); here the stitch is a segmented running
+    last-non-null over a per-bucket summary. See the module docstring
+    for the boundary argument and tools/skew_probe.py for the measured
+    comparison."""
     return asof_orderkey_bucketed(
         table(spark, sf_dir, "events"), table(spark, sf_dir, "orders")
     )
 
 
-@query(
-    "c_join_asof_adaptive",
-    # Same oracle SQL as c_join_asof / c_join_asof_bucketed: the
-    # adaptive hot/cold split can route rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "SELECT e.event_id, e.user_id, "
-        "(SELECT o.o_orderkey FROM orders o "
-        " WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts "
-        " ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) AS asof_orderkey "
-        "FROM events e"
-    ),
-)
+@query("c_join_asof_adaptive", oracle=_ASOF_ORACLE)
 def c_join_asof_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION as-of entry point (functions/asof.asof_orderkey):
-    hot/cold-split dispatch. A bounded probe (≤ 1/threshold keys by
-    construction) names the users whose row share crosses the skew
-    threshold; their rows — and only theirs — go through the
-    bucket-and-stitch shape (c_join_asof_bucketed's machinery), the
-    rest through the plain single-exchange window (c_join_asof's).
-    On the uniform test corpora the probe finds no hot keys and this
-    collapses to the plain plan plus one probe pass; on the skew
-    lane's 30%-hot corpus it confines the stitch to the hot user's
-    rows (tools/skew_probe.py measures both). The whole-corpus stitch
-    is deliberately NOT the adaptive answer: on sparse per-user data
-    its summary is corpus-sized (3.1× plain warm, measured), so the split
-    keeps each shape exactly where it wins. The both-sides probe
-    (events.user_id ∪ orders.o_custkey) is PINNED per session
-    (`hot_key_profile`, the r10 amortization)."""
-    from ..functions.asof import asof_orderkey
-    from ..functions.sessionize import hot_key_profile
-
+    hot/cold-split dispatch (functions/skew.hot_split). Users whose row
+    share crosses the skew threshold go through the bucket-and-stitch
+    shape (c_join_asof_bucketed's machinery), the rest through the
+    plain single-exchange window (c_join_asof's). On the uniform test
+    corpora the probe finds no hot keys and this collapses to the plain
+    plan; on the skew lane's 30%-hot corpus it confines the stitch to
+    the hot user's rows (tools/skew_probe.py measures both). The
+    both-sides probe (events.user_id ∪ orders.o_custkey) is PINNED per
+    session (`hot_key_profile`)."""
     return asof_orderkey(
         table(spark, sf_dir, "events"),
         table(spark, sf_dir, "orders"),
@@ -1346,33 +1307,19 @@ def c_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_window_lag",
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
+_LAG_ORACLE = (
+    "SELECT event_id, user_id, value, "
+    "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
+    "FROM events"
 )
+
+
+@query("c_window_lag", oracle=_LAG_ORACLE)
 def c_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    return table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value", F.lag("value").over(w).alias("prev_value")
-    )
+    return lag_prev_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_window_lag_bucketed",
-    # Same oracle SQL as c_window_lag ON PURPOSE: the oracle states the
-    # simple semantics (one per-user LAG); the Spark side is the
-    # skew-resistant bucket-and-stitch implementation, so the
-    # differential check proves it ≡ the plain window.
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
-)
+@query("c_window_lag_bucketed", oracle=_LAG_ORACLE)
 def c_window_lag_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant per-user LAG (functions/lagstitch.py): the same
     output contract as c_window_lag computed as bucket-and-stitch —
@@ -1380,42 +1327,20 @@ def c_window_lag_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition ever holds more than one (user, bucket) of data, a
     local LAG answers every row except bucket heads, and heads take
     their predecessor from a per-bucket closing-value summary via a
-    plain LAG over the tiny user-keyed summary window (consecutive
-    summary rows ARE the user's consecutive non-empty buckets). The
-    plain shape degraded 1.9–2.3× on the r7 skew lane's 30%-hot key;
-    this is the mitigation the lane predicted would apply directly.
-    See the module docstring and tools/skew_probe.py;
-    `functions/lagstitch.lag_prev` is the ADAPTIVE entry point
-    dispatching plain-vs-bucketed off the same top-key-share probe as
-    sessionize/SCD2."""
-    from ..functions.lagstitch import lag_prev_bucketed
-
+    plain LAG over the tiny user-keyed summary window. The plain shape
+    degraded 1.9–2.3× on the r7 skew lane's 30%-hot key. See the
+    module docstring and tools/skew_probe.py."""
     return lag_prev_bucketed(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_window_lag_adaptive",
-    # Same oracle SQL as c_window_lag / c_window_lag_bucketed: the
-    # adaptive hot/cold split can route rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "SELECT event_id, user_id, value, "
-        "LAG(value) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_value "
-        "FROM events"
-    ),
-)
+@query("c_window_lag_adaptive", oracle=_LAG_ORACLE)
 def c_window_lag_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION per-user LAG entry point
     (functions/lagstitch.lag_prev): hot/cold-split dispatch — hot
     users' rows through the bucket-and-stitch segmented LAG, everyone
-    else through the plain single-exchange window (see
-    c_join_asof_adaptive for the measured rationale; the skew lane
-    times this entry on both the uniform and 30%-hot corpora). The
-    probe is PINNED per (table, key) per session (`hot_key_profile`,
-    the r10 amortization)."""
-    from ..functions.lagstitch import lag_prev
-    from ..functions.sessionize import hot_key_profile
-
+    else through the plain single-exchange window (the skew lane times
+    this entry on both the uniform and 30%-hot corpora). The probe is
+    PINNED per (table, key) per session (`hot_key_profile`)."""
     return lag_prev(
         table(spark, sf_dir, "events"),
         hot=hot_key_profile(spark, sf_dir, ("events", "user_id")),
@@ -2099,10 +2024,10 @@ FROM c ORDER BY cnt DESC, user_id LIMIT 10
 )
 def c_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostics as a first-class operator — the probe the
-    adaptive dispatch family (functions/sessionize.hot_keys /
-    estimate_top_key_share) runs before choosing plain vs
-    bucket-and-stitch, promoted to a registered report: the top-10
-    hottest keys with exact counts and integer-ppm row shares. A
+    adaptive dispatch family (functions/skew.hot_keys) runs before
+    choosing plain vs bucket-and-stitch, promoted to a registered
+    report: the top-10 hottest keys with exact counts and integer-ppm
+    row shares. A
     100 TB operator fleet runs this continuously because skew is a
     property of the DATA, not the query — the hot-key list feeds
     salting, hot/cold splits and AQE hints, and watching share_ppm
@@ -2621,92 +2546,45 @@ def c_window_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_sessionize_gaps",
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
+_SESS_ORACLE = (
+    "WITH e AS ("
+    "  SELECT user_id, event_id, ts,"
+    "    CASE WHEN lag(ts) OVER w IS NULL"
+    "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
+    "         ELSE 0 END AS new_s"
+    "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
+    "), s AS ("
+    "  SELECT user_id, ts,"
+    "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
+    "      ROWS UNBOUNDED PRECEDING) AS session_id"
+    "  FROM e)"
+    "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
+    "CAST(COUNT(*) AS BIGINT) AS n_events, "
+    "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
+    "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
+    "FROM s GROUP BY user_id, session_id"
 )
+
+
+@query("c_sessionize_gaps", oracle=_SESS_ORACLE)
 def c_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gap-sessionization with explicit session NUMBERING (the
-    lag + cumulative-sum pattern): a user\'s events start a new session
-    after a >30 min silence; session_id is the running count of
-    session starts, so sessions are stable, joinable keys — the batch
-    complement of the F.session_window streaming aggregate
-    (c_stream_session numbers nothing). Scale shape: both window
-    functions share one hash partitioning on user_id (single exchange
-    + one sort feeds lag AND the running sum), then the per-session
-    rollup is a partial-agg shuffle of slim rows. Tie-break on
-    event_id keeps the row order — and therefore the numbering —
-    engine-independent."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # MICROSECOND-exact gap (r11, caught by the true-sf1 sweep): the
-    # oracle's epoch() keeps sub-second precision — and so does
-    # F.session_window (c_stream_session agreed with the oracle at sf1
-    # while this lane was 14 sessions short) — so the gap must be
-    # differenced at full precision, not after per-timestamp
-    # truncation to seconds, which mis-classifies gaps inside
-    # (1800, 1801). Timezone cancels in the difference.
-    us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    gap = us(F.col("ts")) - us(F.lag("ts").over(w))
-    new_s = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
-    sessions = (
-        table(spark, sf_dir, "events")
-        .select("user_id", "event_id", "ts")
-        .withColumn(
-            "session_id",
-            F.sum(new_s).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-    )
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
+    lag + cumulative-sum pattern, functions/sessionize.sessionize_plain):
+    a user\'s events start a new session after a >30 min silence;
+    session_id is the running count of session starts, so sessions are
+    stable, joinable keys — the batch complement of the
+    F.session_window streaming aggregate (c_stream_session numbers
+    nothing). Scale shape: both window functions share one hash
+    partitioning on user_id (single exchange + one sort feeds lag AND
+    the running sum), then the per-session rollup is a partial-agg
+    shuffle of slim rows. Tie-break on event_id keeps the row order —
+    and therefore the numbering — engine-independent; the gap is
+    differenced at microsecond precision, as the oracle\'s epoch()
+    does."""
+    return sessionize_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_sessionize_bucketed",
-    # Same oracle SQL as c_sessionize_gaps ON PURPOSE: the oracle states
-    # the simple semantics (one lag+cumsum window); the Spark side is
-    # the skew-resistant two-phase implementation, so the differential
-    # check proves bucket-and-stitch ≡ the plain sessionizer.
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
-)
+@query("c_sessionize_bucketed", oracle=_SESS_ORACLE)
 def c_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant sessionization (functions/sessionize.py): the
     same output contract as c_sessionize_gaps — per-user running
@@ -2719,10 +2597,7 @@ def c_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed window runs over the tiny per-bucket summary. See the
     module docstring for the offset-telescoping argument and
     tools/skew_probe.py for the measured comparison."""
-    from ..functions.sessionize import sessionize_bucketed
-
-    ev = table(spark, sf_dir, "events")
-    out = sessionize_bucketed(ev)
+    out = sessionize_bucketed(table(spark, sf_dir, "events"))
     return out.select(
         "user_id",
         F.col("session_id").cast("long").alias("session_id"),
@@ -2732,41 +2607,15 @@ def c_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_sessionize_adaptive",
-    # Same oracle SQL as c_sessionize_gaps / c_sessionize_bucketed:
-    # the adaptive hot/cold split routes rows through either proven
-    # shape, and the differential check pins the merged output.
-    oracle=(
-        "WITH e AS ("
-        "  SELECT user_id, event_id, ts,"
-        "    CASE WHEN lag(ts) OVER w IS NULL"
-        "          OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1"
-        "         ELSE 0 END AS new_s"
-        "  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
-        "), s AS ("
-        "  SELECT user_id, ts,"
-        "    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-        "      ROWS UNBOUNDED PRECEDING) AS session_id"
-        "  FROM e)"
-        "SELECT user_id, CAST(session_id AS BIGINT) AS session_id, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events, "
-        "CAST(MIN(ts) AS TIMESTAMP) AS session_start, "
-        "CAST(MAX(ts) AS TIMESTAMP) AS session_end "
-        "FROM s GROUP BY user_id, session_id"
-    ),
-)
+@query("c_sessionize_adaptive", oracle=_SESS_ORACLE)
 def c_sessionize_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION sessionize entry point
     (functions/sessionize.sessionize): hot/cold-split dispatch — hot
     users' rows through bucket-and-stitch, everyone else through the
-    plain single-window sessionizer (see c_join_asof_adaptive for the
-    measured rationale; r7.2 backported the split to the whole
-    window-stitch family). The probe is PINNED per (table, key) per
-    session (`hot_key_profile`, the r10 amortization): on uniform
-    corpora this collapses to the plain plan plus one memo hit."""
-    from ..functions.sessionize import hot_key_profile, sessionize
-
+    plain single-window sessionizer (functions/skew.py has the measured
+    rationale). The probe is PINNED per (table, key) per session
+    (`hot_key_profile`): on uniform corpora this collapses to the
+    plain plan plus one memo hit."""
     out = sessionize(
         table(spark, sf_dir, "events"),
         hot=hot_key_profile(spark, sf_dir, ("events", "user_id")),
@@ -2906,25 +2755,25 @@ def c_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c_scd2_intervals",
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
+_SCD2_ORACLE = (
+    "WITH ordered AS ("
+    "  SELECT user_id, event_type, ts, event_id, "
+    "  LAG(event_type) OVER w AS prev_type "
+    "  FROM events WINDOW w AS "
+    "  (PARTITION BY user_id ORDER BY ts, event_id)), "
+    "starts AS ("
+    "  SELECT user_id, event_type, ts AS valid_from, event_id "
+    "  FROM ordered "
+    "  WHERE prev_type IS NULL OR event_type <> prev_type) "
+    "SELECT user_id, event_type, valid_from, "
+    "LEAD(valid_from) OVER w2 AS valid_to, "
+    "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
+    "FROM starts WINDOW w2 AS "
+    "(PARTITION BY user_id ORDER BY valid_from, event_id)"
 )
+
+
+@query("c_scd2_intervals", oracle=_SCD2_ORACLE)
 def c_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) build from an event log: per
     user, collapse consecutive repeats of event_type and emit validity
@@ -2932,62 +2781,15 @@ def c_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     open interval — the standard dimension-history table every
     warehouse derives from CDC streams.
 
-    Shape at scale: two window passes over ONE user-keyed exchange
-    (the second window re-sorts locally within unchanged partitions —
-    Catalyst plans no second Exchange); change detection is
-    LAG-compare, interval close is LEAD. The unique event_id
-    tie-break makes same-timestamp orderings engine-identical."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    starts = (
-        table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            "event_type",
-            "ts",
-            "event_id",
-            F.lag("event_type").over(w).alias("prev_type"),
-        )
-        .filter(
-            F.col("prev_type").isNull()
-            | (F.col("event_type") != F.col("prev_type"))
-        )
-        .select(
-            "user_id", "event_type", F.col("ts").alias("valid_from"), "event_id"
-        )
-    )
-    w2 = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
-    return starts.select(
-        "user_id",
-        "event_type",
-        "valid_from",
-        F.lead("valid_from").over(w2).alias("valid_to"),
-        F.lead("valid_from").over(w2).isNull().alias("is_current"),
-    )
+    Shape at scale (functions/scd2.scd2_intervals_plain): two window
+    passes over ONE user-keyed exchange (the second window re-sorts
+    locally within unchanged partitions — Catalyst plans no second
+    Exchange); change detection is LAG-compare, interval close is
+    LEAD."""
+    return scd2_intervals_plain(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_scd2_bucketed",
-    # Same oracle SQL as c_scd2_intervals ON PURPOSE: the oracle states
-    # the simple semantics (two user-keyed windows); the Spark side is
-    # the skew-resistant bucket-and-stitch implementation, so the
-    # differential check proves it ≡ the plain SCD2 build.
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
-)
+@query("c_scd2_bucketed", oracle=_SCD2_ORACLE)
 def c_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant SCD type-2 build (functions/scd2.py): the same
     output contract as c_scd2_intervals — per-user validity intervals
@@ -3002,47 +2804,19 @@ def c_scd2_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for head suppression, first-surviving-start for interval close).
     Measured r7: skew_ratio 0.73 on the 30%-hot-key corpus vs the
     plain shape's 2.6. See the module docstring for the boundary-
-    reconciliation argument and the deliberate no-checkpoint decision,
-    and tools/skew_probe.py for the measured comparison."""
-    from ..functions.scd2 import scd2_intervals_bucketed
-
+    reconciliation argument and tools/skew_probe.py for the measured
+    comparison."""
     return scd2_intervals_bucketed(table(spark, sf_dir, "events"))
 
 
-@query(
-    "c_scd2_adaptive",
-    # Same oracle SQL as c_scd2_intervals / c_scd2_bucketed: the
-    # adaptive hot/cold split routes rows through either proven shape,
-    # and the differential check pins the merged output.
-    oracle=(
-        "WITH ordered AS ("
-        "  SELECT user_id, event_type, ts, event_id, "
-        "  LAG(event_type) OVER w AS prev_type "
-        "  FROM events WINDOW w AS "
-        "  (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "starts AS ("
-        "  SELECT user_id, event_type, ts AS valid_from, event_id "
-        "  FROM ordered "
-        "  WHERE prev_type IS NULL OR event_type <> prev_type) "
-        "SELECT user_id, event_type, valid_from, "
-        "LEAD(valid_from) OVER w2 AS valid_to, "
-        "CAST(LEAD(valid_from) OVER w2 IS NULL AS BOOLEAN) AS is_current "
-        "FROM starts WINDOW w2 AS "
-        "(PARTITION BY user_id ORDER BY valid_from, event_id)"
-    ),
-)
+@query("c_scd2_adaptive", oracle=_SCD2_ORACLE)
 def c_scd2_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION SCD2 entry point (functions/scd2.scd2_intervals):
     hot/cold-split dispatch — hot users' change logs through
     bucket-and-stitch, everyone else through the plain two-window
-    shape (see c_join_asof_adaptive for the measured rationale; r7.2
-    backported the split to the whole window-stitch family). The
-    probe is PINNED per (table, key) per session (`hot_key_profile`,
-    the r10 amortization): on uniform corpora this collapses to the
-    plain plan plus one memo hit."""
-    from ..functions.scd2 import scd2_intervals
-    from ..functions.sessionize import hot_key_profile
-
+    shape (functions/skew.py has the measured rationale). The probe is
+    PINNED per (table, key) per session (`hot_key_profile`): on uniform
+    corpora this collapses to the plain plan plus one memo hit."""
     return scd2_intervals(
         table(spark, sf_dir, "events"),
         hot=hot_key_profile(spark, sf_dir, ("events", "user_id")),
@@ -4208,6 +3982,15 @@ def c_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EWMA_L = 8  # lookback frame (rows); decay 1/2 per step
 
+
+def _ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        F.floor(F.col("value") * 1000000).cast("long").alias("x_micro"),
+    )
+
+
 _EWMA_ORACLE = f"""
 WITH e AS (
   SELECT user_id, event_id, CAST(floor(value * 1000000) AS BIGINT) AS x_micro,
@@ -4248,48 +4031,14 @@ def c_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted by the hash match).
 
     Scale shape: ONE shuffle on user_id for the window sort; the frame
-    fold is a per-row array aggregate inside codegen. The oracle's
+    fold (functions/framestitch.ewma_from_frame) is a per-row array
+    aggregate inside codegen. The oracle's
     O(frame²) self-join is the SQL statement of the semantics, not the
     plan. Skew: user-keyed frames are the c_window_lag shape — the
-    bucket-and-stitch lane (functions/lagstitch.py) applies verbatim
+    bucket-and-stitch lane (functions/framestitch.py) applies verbatim
     if a hot user ever dominates."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(-(_EWMA_L - 1), Window.currentRow)
-    )
-    x = F.floor(F.col("value") * 1000000).cast("long")
-    e = table(spark, sf_dir, "events").select(
-        "user_id", "event_id", x.alias("x_micro")
-    )
-    vals = F.collect_list("x_micro").over(w)
-    num = F.aggregate(
-        vals,
-        F.struct(
-            F.lit(0).cast("long").alias("num"), F.lit(1).cast("long").alias("wt")
-        ),
-        lambda acc, v: F.struct(
-            (acc.num + v * acc.wt).alias("num"), (acc.wt * 2).alias("wt")
-        ),
-        lambda acc: acc.num,
-    )
-    den = F.pow(F.lit(2.0), F.size(vals)).cast("long") - 1
-    return e.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        num.alias("num"),
-        den.alias("den"),
-    ).select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        # DECIMAL(38,0) widening before the ×10^6 so no corpus's value
-        # range can wrap the product; `div` truncates and `//` floors,
-        # identical here because x_micro (and so num) is non-negative.
-        F.expr(
-            "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
-        ).alias("ewma_pico"),
+    return ewma_from_frame(
+        frame_values_plain(_ewma_events(spark, sf_dir), _EWMA_L)
     )
 
 
@@ -4329,29 +4078,11 @@ def c_window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     state anywhere (contrast percentile_approx, which is the right
     tool for CORPUS quantiles but needless machinery for a bounded
     frame). The frame is rows-based, so a hot user costs frame-length
-    work per row, not per-partition blowup; the lagstitch bucket lane
+    work per row, not per-partition blowup; the framestitch bucket lane
     applies if user skew ever bites."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(-(_RMED_L - 1), Window.currentRow)
+    return rolling_median_from_frame(
+        frame_values_plain(_ewma_events(spark, sf_dir), _RMED_L)
     )
-    e = table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.floor(F.col("value") * 1000000).cast("long").alias("x_micro"),
-    )
-    s = F.array_sort(F.collect_list("x_micro").over(w))
-    n = F.size(s)
-    med2 = (
-        F.when(
-            n % 2 == 1, F.element_at(s, ((n + 1) / 2).cast("int")) * 2
-        ).otherwise(
-            F.element_at(s, (n / 2).cast("int"))
-            + F.element_at(s, (n / 2).cast("int") + 1)
-        )
-    ).cast("long")
-    return e.select("user_id", "event_id", "x_micro", med2.alias("med2_micro"))
 
 
 # ---------------------------------------------------------------------------
@@ -4626,14 +4357,6 @@ def c_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ewma_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.floor(F.col("value") * 1000000).cast("long").alias("x_micro"),
-    )
-
-
 @query("c_ewma_bucketed", oracle=_EWMA_ORACLE)
 def c_ewma_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-and-stitch EWMA (functions/framestitch.py): local frame
@@ -4641,29 +4364,23 @@ def c_ewma_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stitched from a BOUNDED window over the per-bucket summary — no
     task ever owns more than one (user, bucket) of data. Same oracle
     as c_ewma."""
-    from ..functions.framestitch import ewma_from_frame, frame_values_bucketed
-
     return ewma_from_frame(
-        frame_values_bucketed(_ewma_events(spark, sf_dir), frame_len=8)
+        frame_values_bucketed(_ewma_events(spark, sf_dir), frame_len=_EWMA_L)
     )
 
 
 @query("c_ewma_adaptive", oracle=_EWMA_ORACLE)
 def c_ewma_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOT/COLD split EWMA — the production entry point (the
-    functions/asof.py rationale: whole-corpus stitching re-pays the
+    functions/skew.py rationale: whole-corpus stitching re-pays the
     corpus exactly where plain is already optimal): a bounded hot-key
     probe routes only hot users through the stitch. Same oracle; the
     dispatch can change the plan, never the answer. The probe is
-    PINNED per (table, key) per session (`hot_key_profile`, the r10
-    amortization)."""
-    from ..functions.framestitch import ewma_from_frame, frame_values
-    from ..functions.sessionize import hot_key_profile
-
+    PINNED per (table, key) per session (`hot_key_profile`)."""
     return ewma_from_frame(
         frame_values(
             _ewma_events(spark, sf_dir),
-            frame_len=8,
+            frame_len=_EWMA_L,
             hot=hot_key_profile(spark, sf_dir, ("events", "user_id")),
         )
     )
@@ -4674,13 +4391,8 @@ def c_rolling_median_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-and-stitch rolling median — the same (L−1)-row carry
     machinery with the exact 2×-median fold. Same oracle as
     c_window_rolling_median."""
-    from ..functions.framestitch import (
-        frame_values_bucketed,
-        rolling_median_from_frame,
-    )
-
     return rolling_median_from_frame(
-        frame_values_bucketed(_ewma_events(spark, sf_dir), frame_len=5)
+        frame_values_bucketed(_ewma_events(spark, sf_dir), frame_len=_RMED_L)
     )
 
 
@@ -4688,14 +4400,11 @@ def c_rolling_median_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c_rolling_median_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOT/COLD split rolling median — the production entry point.
     The probe is PINNED per (table, key) per session
-    (`hot_key_profile`, the r10 amortization)."""
-    from ..functions.framestitch import frame_values, rolling_median_from_frame
-    from ..functions.sessionize import hot_key_profile
-
+    (`hot_key_profile`)."""
     return rolling_median_from_frame(
         frame_values(
             _ewma_events(spark, sf_dir),
-            frame_len=5,
+            frame_len=_RMED_L,
             hot=hot_key_profile(spark, sf_dir, ("events", "user_id")),
         )
     )
@@ -4757,74 +4466,9 @@ def c_anomaly_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the EWMA frame fold, the forecast LAG and the
     per-user moment aggregates all ride ONE user-keyed exchange
     (window aggregates over the same partitioning — no second
-    shuffle, no join); skew exposure equals c_ewma's, and the same
-    framestitch lane applies to the fold if a hot user bites."""
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    wf = w.rowsBetween(-(_EWMA_L - 1), Window.currentRow)
-    wp = Window.partitionBy("user_id")
-    e = table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.floor(F.col("value") * 1000000).cast("long").alias("x_micro"),
-    )
-    vals = F.collect_list("x_micro").over(wf)
-    num = F.aggregate(
-        vals,
-        F.struct(
-            F.lit(0).cast("long").alias("num"), F.lit(1).cast("long").alias("wt")
-        ),
-        lambda acc, v: F.struct(
-            (acc.num + v * acc.wt).alias("num"), (acc.wt * 2).alias("wt")
-        ),
-        lambda acc: acc.num,
-    )
-    den = F.pow(F.lit(2.0), F.size(vals)).cast("long") - 1
-    p = e.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        num.alias("num"),
-        den.alias("den"),
-    ).select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.expr(
-            "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
-        ).alias("ewma_pico"),
-    )
-    l = p.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        (F.col("x_micro") * 1000000 - F.lag("ewma_pico").over(w)).alias(
-            "residual_pico"
-        ),
-        F.count(F.lit(1)).over(wp).cast("long").alias("n"),
-        F.sum(F.col("x_micro").cast("decimal(38,0)"))
-        .over(wp)
-        .cast("double")
-        .alias("s"),
-        F.sum(
-            F.col("x_micro").cast("decimal(19,0)")
-            * F.col("x_micro").cast("decimal(19,0)")
-        )
-        .over(wp)
-        .cast("double")
-        .alias("q"),
-    )
-    rp = F.col("residual_pico").cast("double") / 1000000
-    var = (F.col("q") - F.col("s") * F.col("s") / F.col("n")) / F.col("n")
-    return l.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.col("residual_pico").cast("long").alias("residual_pico"),
-        F.when(F.col("residual_pico").isNull(), F.lit(0))
-        .otherwise((rp * rp > F.lit(4.0) * var).cast("int"))
-        .cast("int")
-        .alias("anomaly"),
-    )
+    shuffle, no join); skew exposure equals c_ewma's, and
+    c_anomaly_adaptive is the hot/cold split."""
+    return _anomaly_plain_on(_ewma_events(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -5503,42 +5147,13 @@ def c_join_interval_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _anomaly_plain_on(e: DataFrame) -> DataFrame:
-    """Function twin of the c_anomaly_ewma body over an arbitrary
-    (user_id, event_id, x_micro) frame — the lagstitch `lag_prev_plain`
-    discipline: a callable twin rather than a refactor, so the
-    registered query keeps its verification fingerprint. The adaptive
-    dispatch routes COLD users here (and whole uniform corpora: with
-    no hot key this IS the optimal shape — three window aggregates on
-    one user-keyed exchange)."""
+    """The c_anomaly_ewma shape over an (user_id, event_id, x_micro)
+    frame: the EWMA frame fold, the forecast LAG and the per-user
+    moments — three window aggregates on one user-keyed exchange. The
+    adaptive dispatch routes COLD users here."""
     w = Window.partitionBy("user_id").orderBy("event_id")
-    wf = w.rowsBetween(-(_EWMA_L - 1), Window.currentRow)
     wp = Window.partitionBy("user_id")
-    vals = F.collect_list("x_micro").over(wf)
-    num = F.aggregate(
-        vals,
-        F.struct(
-            F.lit(0).cast("long").alias("num"), F.lit(1).cast("long").alias("wt")
-        ),
-        lambda acc, v: F.struct(
-            (acc.num + v * acc.wt).alias("num"), (acc.wt * 2).alias("wt")
-        ),
-        lambda acc: acc.num,
-    )
-    den = F.pow(F.lit(2.0), F.size(vals)).cast("long") - 1
-    p = e.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        num.alias("num"),
-        den.alias("den"),
-    ).select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.expr(
-            "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
-        ).alias("ewma_pico"),
-    )
+    p = ewma_from_frame(frame_values_plain(e, _EWMA_L))
     l = p.select(
         "user_id",
         "event_id",
@@ -5579,36 +5194,7 @@ def _anomaly_stitched_on(e: DataFrame, hot: list) -> DataFrame:
     derived EWMA rows (the stitch is generic over its value column),
     moments as a map-side-combined groupBy+join — no user window ever
     holds a hot key\'s full history in one task."""
-    from ..functions.framestitch import frame_values
-    from ..functions.lagstitch import lag_prev
-
-    fv = frame_values(e, frame_len=_EWMA_L, hot=hot)
-    num = F.aggregate(
-        F.col("frame"),
-        F.struct(
-            F.lit(0).cast("long").alias("num"), F.lit(1).cast("long").alias("wt")
-        ),
-        lambda acc, v: F.struct(
-            (acc.num + v * acc.wt).alias("num"), (acc.wt * 2).alias("wt")
-        ),
-        lambda acc: acc.num,
-    )
-    den = F.pow(F.lit(2.0), F.size("frame")).cast("long") - 1
-    ew = fv.select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        num.alias("num"),
-        den.alias("den"),
-    ).select(
-        "user_id",
-        "event_id",
-        "x_micro",
-        F.expr(
-            "CAST(CAST(num AS DECIMAL(38,0)) * 1000000 DIV den AS BIGINT)"
-        ).alias("ewma_pico"),
-    )
-    ew = materialize(ew)
+    ew = materialize(ewma_from_frame(frame_values(e, frame_len=_EWMA_L, hot=hot)))
     prev = lag_prev(
         ew.select("event_id", "user_id", F.col("ewma_pico").alias("value")),
         hot=hot,
@@ -5649,8 +5235,8 @@ def c_anomaly_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant anomaly flags — the adversarial probe measured
     plain c_anomaly_ewma at **5.36×** under the 30%-hot user (it
     stacks THREE user-partition windows: frame fold, forecast LAG,
-    moment aggregates). Since r10 this is a true HOT/COLD SPLIT (the
-    functions/asof.py discipline, replacing the r9 whole-corpus
+    moment aggregates). Since r10 this is a true HOT/COLD SPLIT
+    (functions/skew.hot_split, replacing the r9 whole-corpus
     composition whose pin + join-vs-window moments cost every user
     ~4.5× plain on uniform data): the PINNED per-(table, key) probe
     (`hot_key_profile`, one build per session) names the hot users;
@@ -5658,22 +5244,19 @@ def c_anomaly_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`_anomaly_stitched_on`: framestitch frame fold, lagstitch
     forecast LAG on the derived EWMA rows, map-side-combined groupBy
     moments), everyone else rides the plain three-window shape
-    (`_anomaly_plain_on`, the c_anomaly_ewma twin). The anomaly flag
+    (`_anomaly_plain_on`, the c_anomaly_ewma shape). The anomaly flag
     tests each user against their OWN moments, so the per-user split
     is exact; all shapes share _ANOMALY_ORACLE, so dispatch can change
     the plan, never the answer. Measured at the 100× probe: uniform
     4.43 s vs plain 5.12 s (~1.0×, down from the r9 composition's
     ~4.5×), skewed 12.5 s vs plain 27.7 s (2.2× win) — strictly
     dominant in both regimes (tools/skew_probe.py)."""
-    from ..functions.sessionize import hot_key_profile
-
     hot = hot_key_profile(spark, sf_dir, ("events", "user_id"))
     e = _ewma_events(spark, sf_dir)
-    if not hot:
-        return _anomaly_plain_on(e)
-    is_hot = F.coalesce(F.col("user_id").isin(hot), F.lit(False))
-    return _anomaly_plain_on(e.filter(~is_hot)).unionByName(
-        _anomaly_stitched_on(e.filter(is_hot), hot)
+    return hot_split(
+        lambda cut: _anomaly_plain_on(cut(e, "user_id")),
+        lambda cut: _anomaly_stitched_on(cut(e, "user_id"), hot),
+        hot,
     )
 
 

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from async_event_streams_spark.functions.asof import (
     asof_orderkey,
     asof_orderkey_bucketed,
-    asof_orderkey_hotsplit,
 )
 
 EPOCH = dt.datetime(2024, 1, 1)
@@ -216,7 +215,7 @@ def test_hotsplit_routes_cold_keys_through_plain_only(spark):
     events = [(1, 10, _ts(5000)), (2, 20, _ts(5000)), (2, 21, _ts(10))]
     orders = [(1, 100, _ts(50)), (2, 200, _ts(40)), (2, 300, _ts(6000))]
     e, o = _frames(spark, events, orders)
-    out = asof_orderkey_hotsplit(e, o, hot=[1], bucket_sec=600)
+    out = asof_orderkey(e, o, hot=[1], bucket_sec=600)
     got = {r.event_id: (r.user_id, r.asof_orderkey) for r in out.collect()}
     assert got == reference_asof(events, orders)
 
@@ -238,6 +237,6 @@ def test_hotsplit_equals_reference_for_any_hot_set(spark, events, orders, hot):
     evs = [(u, i, _ts(s)) for i, (u, s) in enumerate(events)]
     ords = [(u, k, _ts(s)) for u, k, s in orders]
     e, o = _frames(spark, evs, ords)
-    out = asof_orderkey_hotsplit(e, o, hot=sorted(hot), bucket_sec=3600)
+    out = asof_orderkey(e, o, hot=sorted(hot), bucket_sec=3600)
     got = {r.event_id: (r.user_id, r.asof_orderkey) for r in out.collect()}
     assert got == reference_asof(evs, ords)

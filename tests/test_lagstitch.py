@@ -14,7 +14,6 @@ from hypothesis import strategies as st
 from async_event_streams_spark.functions.lagstitch import (
     lag_prev,
     lag_prev_bucketed,
-    lag_prev_hotsplit,
 )
 
 
@@ -164,7 +163,7 @@ def test_hotsplit_equals_reference_for_any_hot_set(spark, rows, hot, bucket_rows
         (u, i, None if v is None else float(v)) for i, (u, v) in enumerate(rows)
     ]
     df = spark.createDataFrame(data, "user_id long, event_id long, value double")
-    out = lag_prev_hotsplit(df, hot=sorted(hot), bucket_rows=bucket_rows)
+    out = lag_prev(df, hot=sorted(hot), bucket_rows=bucket_rows)
     got = {r.event_id: (r.user_id, r.value, r.prev_value) for r in out.collect()}
     ref = reference_lag(data)
     assert set(got) == set(ref)

@@ -611,6 +611,29 @@ def test_scd2_bucketed_events_window_keyed_by_bucket(spark, sf_dir):
     assert op_count(plan, "Exchange") <= 3, plan
 
 
+@pytest.mark.parametrize(
+    "name,exchanges,windows",
+    [
+        ("c_join_asof_bucketed", 3, 2),
+        ("c_window_lag_bucketed", 3, 2),
+        ("c_sessionize_bucketed", 4, 6),
+        ("c_scd2_bucketed", 3, 6),
+        ("c_ewma_bucketed", 3, 2),
+        ("c_rolling_median_bucketed", 3, 2),
+    ],
+)
+def test_bucket_scan_twins_keep_exchange_and_window_counts(
+    spark, sf_dir, name, exchanges, windows
+):
+    """The six bucket-and-stitch twins share one scan
+    (functions/skew.bucket_scan); their Exchange and Window counts are
+    pinned at the PLAN_CENSUS.json sf0.001 values so an edit to the
+    shared scan cannot silently add a shuffle or a window pass."""
+    plan = plan_of(spark, sf_dir, name)
+    assert op_count(plan, "Exchange") == exchanges, plan
+    assert op_count(plan, "Window") == windows, plan
+
+
 def test_knn_communities_rounds_are_equi_joins(spark, sf_dir):
     """Label propagation must stay an edge-list equi-join per round —
     never all-pairs — and its per-vector argmax must push a

@@ -106,6 +106,37 @@ def test_bucketed_equals_reference_on_random_timelines(
     assert got == reference_sessions(rows, gap_sec)
 
 
+def test_null_users_and_null_ts_match_plain(spark):
+    """NULL user_id rows are their own partition in the plain window
+    and a NULL ts makes the time bucket NULL: the stitch join-back is
+    null-safe on both keys, so neither kind of row may drop or
+    renumber. The contract is bucketed ≡ the plain Spark shape."""
+    from async_event_streams_spark.functions.sessionize import sessionize_plain
+
+    rows = [
+        # NULL user: one session crossing the 3600 s bucket edge, then
+        # a new session
+        (None, 0, _ts(3400)),
+        (None, 1, _ts(3700)),
+        (None, 2, _ts(9000)),
+        # user 1: a NULL-ts row (sorts first, NULL bucket) before a
+        # session that crosses a bucket edge
+        (1, 3, None),
+        (1, 4, _ts(3500)),
+        (1, 5, _ts(3900)),
+        # NULL user AND NULL ts
+        (None, 6, None),
+    ]
+    df = spark.createDataFrame(rows, "user_id long, event_id long, ts timestamp")
+    want = {tuple(r) for r in sessionize_plain(df, gap_sec=1800).collect()}
+    got = {
+        tuple(r)
+        for r in sessionize_bucketed(df, gap_sec=1800, bucket_sec=3600).collect()
+    }
+    assert len(want) == 5
+    assert got == want
+
+
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

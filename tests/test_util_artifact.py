@@ -255,7 +255,7 @@ def test_hot_key_profile_is_pinned_across_adaptive_lanes(spark, sf_dir):
     as-of UNION axis is its own separate artifact). Dispatch cannot
     change answers (oracle-pinned elsewhere); this pins the COST
     property."""
-    from async_event_streams_spark.functions.sessionize import (
+    from async_event_streams_spark.functions.skew import (
         hot_key_profile,
     )
     from async_event_streams_spark.queries import QUERIES
@@ -286,7 +286,7 @@ def test_hot_key_profile_equals_direct_probe(spark, sf_dir):
     """The pinned profile must be VALUE-equivalent to the per-query
     `hot_keys` probe it replaces (same counts, same threshold rule) —
     on the real table and on a forced-skew frame via the union spec."""
-    from async_event_streams_spark.functions.sessionize import (
+    from async_event_streams_spark.functions.skew import (
         hot_key_profile,
         hot_keys,
     )
@@ -323,7 +323,7 @@ def test_hot_key_profile_spec_shapes(spark, sf_dir):
     raise a clear ValueError up front."""
     import pytest
 
-    from async_event_streams_spark.functions.sessionize import (
+    from async_event_streams_spark.functions.skew import (
         hot_key_profile,
     )
 
