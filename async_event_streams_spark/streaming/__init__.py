@@ -66,7 +66,6 @@ from .index import (  # noqa: F401
     index_snapshot,
     postings_snapshot,
 )
-from .stateful import streaming_ewma  # noqa: F401
 from .reach import (  # noqa: F401
     sliding_reach_batch_twin,
     sliding_reach_pipe,

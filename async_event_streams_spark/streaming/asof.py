@@ -28,9 +28,8 @@ emitted row in append mode — same caveat every append-mode twin in
 this package documents; the batch lane is the replayable source of
 truth.
 
-Both streaming engines (applyInPandasWithState and Spark 4's
-transformWithStateInPandas) wrap the SAME `_fold_rows` transition —
-the timeseries.py discipline that keeps the port a wiring change.
+The transition is the pure `_fold_rows`; keyed.py binds it to the
+state store.
 
 Stream == batch-twin == registered-query is pinned in
 tests/test_streaming_asof.py; the fold itself is driven Spark-free
@@ -40,16 +39,13 @@ tests/test_asof_fold_properties.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
-from .keyed import ordered_events
+from .keyed import keyed_stream, keyed_update
 
 try:
     import sys as _sys
@@ -75,12 +71,12 @@ ASOF_STATE_SCHEMA = (
 
 
 def _fold_rows(st: tuple | None, rows) -> tuple[dict, tuple]:
-    """The per-key fold shared by both streaming engines and the
-    Spark-free property tests: (state | None, iterable of
-    (t, is_event, sid, eid, okey) in merged-timeline order) →
-    (event output columns, new state). `sid` is the per-side id that
-    breaks ties (o_orderkey for orders, event_id for events); `okey`
-    is read only on order rows, `eid` only on event rows."""
+    """The per-key fold, driven Spark-free by the property tests:
+    (state | None, iterable of (t, is_event, sid, eid, okey) in
+    merged-timeline order) → (event output columns, new state). `sid`
+    is the per-side id that breaks ties (o_orderkey for orders,
+    event_id for events); `okey` is read only on order rows, `eid` only
+    on event rows."""
     if st is not None:
         wm = (int(st[0]), int(st[1]), int(st[2]))
         last_okey, has_order, n_seen = int(st[3]), int(st[4]), int(st[5])
@@ -126,80 +122,19 @@ def _out_frame(key: tuple, out: dict) -> pd.DataFrame:
     )
 
 
-_SORT = ("t", "is_event", "sid")
+_update = keyed_update(
+    _fold_rows, _rows_from_pdf, _out_frame, ("t", "is_event", "sid")
+)
 
 
-def _update(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """The applyInPandasWithState wrapper around `_fold_rows`."""
-    pdf = ordered_events(pdf_iter, sort_cols=_SORT)
-    rows = [] if pdf is None else _rows_from_pdf(pdf)
-    out, new_state = _fold_rows(
-        tuple(state.get) if state.exists else None, rows
-    )
-    state.update(new_state)
-    if out["event_id"]:
-        yield _out_frame(key, out)
-
-
-class AsofProcessor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("asof_state", ASOF_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows, sort_cols=_SORT)
-        it = [] if pdf is None else _rows_from_pdf(pdf)
-        out, new_state = _fold_rows(
-            tuple(self._state.get()) if self._state.exists() else None, it
-        )
-        self._state.update(new_state)
-        if out["event_id"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def asof_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def asof_stream(df: DataFrame) -> DataFrame:
     """Merged-timeline stream (user_id, t, is_event, sid, eid, okey) →
     one (user_id, event_id, asof_orderkey) row per event. State is
     O(keys): 6 longs per user, regardless of order volume — the reason
     this beats buffering the order side in a stream-stream join at
     100 TB (a whale user's full order history never accumulates in the
     state store; only its maximum survives)."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return df.groupBy("user_id").applyInPandasWithState(
-            _update,
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=ASOF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "AsofStatefulProcessor", (StatefulProcessor,),
-        dict(AsofProcessor.__dict__),
-    )
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
+    return keyed_stream(df, _update, ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

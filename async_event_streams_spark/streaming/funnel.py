@@ -13,19 +13,18 @@ per-user stage equals the batch query's step membership exactly
 Same per-key FIFO/ordering contract and chunk handling as
 streaming/scd2.py: all Arrow chunks are concatenated before sorting,
 and rows at-or-behind the key's last-seen (ts, event_id) are dropped
-defensively. State is O(keys): three int64 timestamps per user.
+defensively. State is O(keys): three int64 timestamps per user. The
+transition is the pure `_fold_events`; keyed.py binds it to the state
+store.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .keyed import UNSET_US, ordered_events, ts_us
+from .keyed import UNSET_US, keyed_stream, keyed_update, ts_us
 
 # Stateful update closures from this module are shipped to Python
 # workers; register by value so a driver running outside the repo root
@@ -54,8 +53,7 @@ _STEPS = ("view", "click", "purchase")
 
 
 def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
-    """The per-key transition shared by BOTH streaming engines (the
-    timeseries.py discipline) and driven Spark-free by the property
+    """The per-key transition, driven Spark-free by the property
     tests: (state tuple | None, iterable of (t_us, eid, etype)) →
     (stage-advance output columns, new state tuple)."""
     t1, t2, t3, last_us, last_eid = (
@@ -92,9 +90,7 @@ def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
     return out, (t1, t2, t3, last_us, last_eid)
 
 
-def _events_from_pdf(pdf: pd.DataFrame | None):
-    if pdf is None:
-        return []
+def _events_from_pdf(pdf: pd.DataFrame):
     return zip(ts_us(pdf["ts"]), pdf["event_id"], pdf["event_type"])
 
 
@@ -108,79 +104,14 @@ def _out_frame(key: tuple, out: dict) -> pd.DataFrame:
     )
 
 
-def _update(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """The applyInPandasWithState wrapper around `_fold_events`
-    (module-level so the Spark-free property test can drive it
-    against a prefix-recompute reference)."""
-    pdf = ordered_events(pdf_iter)  # chunk-safe concat-then-sort
-    out, new_state = _fold_events(
-        tuple(state.get) if state.exists else None, _events_from_pdf(pdf)
-    )
-    state.update(new_state)
-    if out["stage"]:
-        yield _out_frame(key, out)
+# module-level so the Spark-free property test can drive it against a
+# prefix-recompute reference
+_update = keyed_update(_fold_events, _events_from_pdf, _out_frame)
 
 
-class FunnelProcessor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("funnel_state", FUNNEL_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows)
-        out, new_state = _fold_events(
-            tuple(self._state.get()) if self._state.exists() else None,
-            _events_from_pdf(pdf),
-        )
-        self._state.update(new_state)
-        if out["stage"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def funnel_stage_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def funnel_stage_stream(df: DataFrame) -> DataFrame:
     """(user_id, event_type, ts, event_id) stream → one append row per
     stage ADVANCE: (user_id, stage 1..3, reached_at). A user's rows
     are strictly increasing in stage; the latest row is their current
-    funnel position.
-
-    engine="tws" rides transformWithStateInPandas (requires protobuf);
-    "compat" rides applyInPandasWithState; "auto" picks tws when
-    available. Both wrap the SAME `_fold_events` transition."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-        )
-
-        cls = type(
-            "FunnelStatefulProcessor", (StatefulProcessor,),
-            dict(FunnelProcessor.__dict__),
-        )
-        return df.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    if engine != "compat":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    return df.groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    funnel position."""
+    return keyed_stream(df, _update, FUNNEL_OUTPUT_SCHEMA, FUNNEL_STATE_SCHEMA)

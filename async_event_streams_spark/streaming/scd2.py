@@ -6,8 +6,8 @@ key in the state store (current event_type + its start) and emits a
 CLOSED interval row whenever the type changes — exactly what a
 warehouse's dimension-history table consumes from a CDC feed. The
 reference's stateful-sink shape (/root/reference/src/pipes.rs:43-94:
-per-key state behind a lock, updated per event) maps to
-applyInPandasWithState: per-key state tuple, Arrow-batched updates,
+per-key state behind a lock, updated per event) maps to the keyed
+state engine (keyed.py): per-key state tuple, Arrow-batched updates,
 checkpointed by the state store.
 
 Ordering contract: the topic layer delivers per-key FIFO (SURVEY
@@ -20,22 +20,17 @@ State is O(keys) — one (type, start, last) tuple per user — so the
 pipe holds at any stream length; timestamps live in the state tuple
 as int64 microseconds (simple state-schema types only).
 
-Both streaming engines (applyInPandasWithState and Spark 4's
-transformWithStateInPandas) wrap the SAME `_fold_events` transition —
-the timeseries.py discipline that keeps the engine port a wiring
-change; the property suite drives the fold once for both.
+The transition is the pure `_fold_events`; keyed.py binds it to the
+state store, and the property suite drives it Spark-free.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .keyed import UNSET_US, ordered_events, ts_us
+from .keyed import UNSET_US, keyed_stream, keyed_update, ts_us
 
 # Stateful update closures from this module are shipped to Python
 # workers; register by value so a driver running outside the repo root
@@ -62,9 +57,7 @@ SCD2_STATE_SCHEMA = (
 
 
 def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
-    """The per-key transition shared by BOTH streaming engines
-    (applyInPandasWithState and transformWithStateInPandas — the
-    timeseries.py discipline) and driven Spark-free by the property
+    """The per-key transition, driven Spark-free by the property
     tests: (state tuple | None, iterable of (t_us, eid, etype)) →
     (closed-interval output columns, new state tuple)."""
     cur_type, from_us, last_us, last_eid = (
@@ -86,9 +79,7 @@ def _fold_events(st: tuple | None, events) -> tuple[dict, tuple]:
     return out, (cur_type, from_us, last_us, last_eid)
 
 
-def _events_from_pdf(pdf: pd.DataFrame | None):
-    if pdf is None:
-        return []
+def _events_from_pdf(pdf: pd.DataFrame):
     return zip(ts_us(pdf["ts"]), pdf["event_id"], pdf["event_type"])
 
 
@@ -103,78 +94,15 @@ def _out_frame(key: tuple, out: dict) -> pd.DataFrame:
     )
 
 
-def _update(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """The applyInPandasWithState wrapper around `_fold_events`
-    (module-level so the Spark-free property test,
-    tests/test_scd2_properties.py, can drive it against a
-    prefix-recompute reference)."""
-    pdf = ordered_events(pdf_iter)  # chunk-safe concat-then-sort
-    out, new_state = _fold_events(
-        tuple(state.get) if state.exists else None, _events_from_pdf(pdf)
-    )
-    state.update(new_state)
-    if out["type"]:
-        yield _out_frame(key, out)
+# module-level so the Spark-free property test,
+# tests/test_scd2_properties.py, can drive it against a
+# prefix-recompute reference
+_update = keyed_update(_fold_events, _events_from_pdf, _out_frame)
 
 
-class Scd2Processor:
-    """transformWithStateInPandas wrapper around the same fold (duck-
-    typed off StatefulProcessor for protobuf-free importability — the
-    timeseries.py gate)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("scd2_state", SCD2_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues=None
-    ) -> Iterator[pd.DataFrame]:
-        pdf = ordered_events(rows)
-        out, new_state = _fold_events(
-            tuple(self._state.get()) if self._state.exists() else None,
-            _events_from_pdf(pdf),
-        )
-        self._state.update(new_state)
-        if out["type"]:
-            yield _out_frame(key, out)
-
-    def close(self) -> None:
-        pass
-
-
-def scd2_intervals_stream(df: DataFrame, engine: str = "auto") -> DataFrame:
+def scd2_intervals_stream(df: DataFrame) -> DataFrame:
     """(user_id, event_type, ts, event_id) stream → closed SCD2
     interval rows [valid_from, valid_to). The OPEN interval per key is
     state, not output — append-mode downstream sinks only ever see
-    finalized history rows (emitting the open row would retract).
-
-    engine="tws" rides transformWithStateInPandas (requires protobuf);
-    "compat" rides applyInPandasWithState; "auto" picks tws when
-    available. Both wrap the SAME `_fold_events` transition."""
-    from .stateful import _protobuf_available
-
-    if engine == "auto":
-        engine = "tws" if _protobuf_available() else "compat"
-    if engine == "compat":
-        return df.groupBy("user_id").applyInPandasWithState(
-            _update,
-            outputStructType=SCD2_OUTPUT_SCHEMA,
-            stateStructType=SCD2_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    if engine != "tws":
-        raise ValueError(f"unknown engine {engine!r} (tws|compat|auto)")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "Scd2StatefulProcessor", (StatefulProcessor,),
-        dict(Scd2Processor.__dict__),
-    )
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
-        outputStructType=SCD2_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
+    finalized history rows (emitting the open row would retract)."""
+    return keyed_stream(df, _update, SCD2_OUTPUT_SCHEMA, SCD2_STATE_SCHEMA)

@@ -64,7 +64,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .topic import DEFAULT_REGISTRY, Topic, TopicRegistry
+from .topic import DEFAULT_REGISTRY, Topic, TopicRegistry, _check_lineage
 
 
 def _txn_parts(txn: str | None) -> tuple[str | None, int]:
@@ -235,6 +235,7 @@ class PartitionedTopic:
         the committed ones)."""
         if not rows and txn is None:
             raise ValueError("post requires at least one row")
+        _check_lineage(rows, source_event_ids)
         if source_event_ids is not None:
             rows = [
                 dict(row, source_event_id=sid)

@@ -60,6 +60,16 @@ ENVELOPE_NAMES = [f.name for f in ENVELOPE_FIELDS]
 _ENVELOPE_SET = frozenset(ENVELOPE_NAMES)
 
 
+def _check_lineage(rows: list, source_event_ids: list | None) -> None:
+    """Reject a lineage list that does not pair one id with each row,
+    before anything is written (a short list would drop rows)."""
+    if source_event_ids is not None and len(source_event_ids) != len(rows):
+        raise ValueError(
+            f"source_event_ids has {len(source_event_ids)} ids "
+            f"for {len(rows)} rows"
+        )
+
+
 class TopicRegistry:
     """Tracks topics and the pipe DAG between them (who feeds whom),
     which is what the chain barrier walks (SURVEY.md §3.3)."""
@@ -267,6 +277,7 @@ class Topic:
         exactly-once mechanism pipes use across crash replays."""
         if not rows and txn is None:
             raise ValueError("post requires at least one row")
+        _check_lineage(rows, source_event_ids)
         with self._lock:
             first = self._next_id
             seg_idx = next_segment_index(self.dir)

@@ -477,3 +477,23 @@ def test_default_drain_name_resumes_exactly_once(spark, topic_root):
         h.stop()
         src.close()
         dst.close()
+
+
+def test_post_rejects_lineage_length_mismatch(spark, topic_root):
+    """A source_event_ids list shorter or longer than the rows raises
+    ValueError and publishes nothing to any partition (a short list
+    used to drop the unpaired rows silently)."""
+    t = PartitionedTopic(
+        spark, "pt_lineage", "k string, v long", topic_root, key_col="k",
+        num_partitions=4, registry=TopicRegistry(),
+    )
+    rows = [{"k": f"key-{n}", "v": n} for n in range(4)]
+    for ids in ([10, 11], [10, 11, 12, 13, 14]):
+        with pytest.raises(ValueError, match="source_event_ids"):
+            t.post(rows, source_event_ids=ids)
+    assert t.batch_df().count() == 0
+    t.post(rows, source_event_ids=[10, 11, 12, 13])
+    got = t.batch_df().select("v", "source_event_id").collect()
+    assert sorted((r.v, r.source_event_id) for r in got) == [
+        (0, 10), (1, 11), (2, 12), (3, 13)
+    ]

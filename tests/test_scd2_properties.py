@@ -98,62 +98,3 @@ def test_scd2_update_matches_prefix_reference(seq, batch_sizes):
     if len(events) > 2:
         events = events[:2] + [events[0]] + events[2:]  # replay
     assert _run(events, batch_sizes) == _reference(events)
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._t = None
-
-    def exists(self):
-        return self._t is not None
-
-    def get(self):
-        return self._t
-
-    def update(self, t):
-        self._t = tuple(t)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema):
-        return self.state
-
-
-def test_tws_processor_matches_compat_engine():
-    """Both streaming engines wrap the SAME scd2 _fold_events
-    transition (the timeseries.py discipline applied to the second
-    family); drive the transformWithStateInPandas processor through a
-    duck-typed handle (protobuf-free) and assert it reproduces the
-    prefix reference — and byte-for-byte the compat engine."""
-    from async_event_streams_spark.streaming.scd2 import Scd2Processor
-
-    events = sorted(
-        [((11 * i) % 5, i, "abc"[(i * i) % 3]) for i in range(40)],
-        key=lambda r: (r[0], r[1]),
-    )
-    proc = Scd2Processor()
-    proc.init(_FakeHandle())
-    got = []
-    for lo in range(0, len(events), 7):
-        batch = events[lo : lo + 7]
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime([t for t, _, _ in batch], unit="us"),
-                "event_id": [e for _, e, _ in batch],
-                "event_type": [y for _, _, y in batch],
-            }
-        )
-        for out in proc.handleInputRows((5,), iter([pdf])):
-            got.extend(
-                (
-                    r.event_type,
-                    r.valid_from.value // 1000,
-                    r.valid_to.value // 1000,
-                )
-                for r in out.itertuples()
-            )
-    assert got == _reference(events)
-    assert got == _run(events, [7] * 6)

@@ -4,16 +4,13 @@ registered c_join_asof, pinned from both ends —
 1. the batch twin over the full merged timeline reproduces the
    registered oracle-checked query row-for-row;
 2. the stateful stream equals the batch twin over all rows sent so
-   far, wave by wave, on both engines (applyInPandasWithState and
-   transformWithStateInPandas where available);
+   far, wave by wave;
 3. a mid-stream restart on a durable sink + checkpoint resumes the
    per-key (watermark, last-order) state exactly — the first
    post-restart event's as-of key depends on a pre-restart order.
 """
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -85,19 +82,13 @@ def _sofar_df(spark, sofar):
     )
 
 
-@pytest.mark.parametrize("engine", ["compat", "tws"])
-def test_asof_stream_equals_batch_wave_by_wave(spark, sf_dir, tmp_path, engine):
+def test_asof_stream_equals_batch_wave_by_wave(spark, sf_dir, tmp_path):
     from async_event_streams_spark.streaming import run_stream_to_memory
-    from async_event_streams_spark.streaming.stateful import (
-        _protobuf_available,
-    )
 
-    if engine == "tws" and not _protobuf_available():
-        pytest.skip("transformWithStateInPandas needs protobuf")
     reg = TopicRegistry()
-    t = Topic(spark, f"asof_{engine}", _PAYLOAD, str(tmp_path / "t"), reg)
+    t = Topic(spark, "asof_waves", _PAYLOAD, str(tmp_path / "t"), reg)
     query, tbl = run_stream_to_memory(
-        asof_stream(t.subscribe(), engine=engine), output_mode="append"
+        asof_stream(t.subscribe()), output_mode="append"
     )
     t.attach_query(query)
     try:

@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from async_event_streams_spark.queries import QUERIES
@@ -109,21 +107,13 @@ def _check_all(spark, emitted, sofar_df):
     assert an == {tuple(r) for r in anomaly_batch_twin(sofar_df).collect()}
 
 
-@pytest.mark.parametrize("engine", ["compat", "tws"])
-def test_timeseries_stream_equals_batch_wave_by_wave(
-    spark, sf_dir, tmp_path, engine
-):
+def test_timeseries_stream_equals_batch_wave_by_wave(spark, sf_dir, tmp_path):
     from async_event_streams_spark.streaming import run_stream_to_memory
-    from async_event_streams_spark.streaming.stateful import (
-        _protobuf_available,
-    )
 
-    if engine == "tws" and not _protobuf_available():
-        pytest.skip("transformWithStateInPandas needs protobuf")
     reg = TopicRegistry()
     t = Topic(spark, "ts_ev", _PAYLOAD, str(tmp_path / "t"), reg)
     query, tbl = run_stream_to_memory(
-        timeseries_stream(_stream_from(t), engine=engine),
+        timeseries_stream(_stream_from(t)),
         output_mode="append",
     )
     t.attach_query(query)

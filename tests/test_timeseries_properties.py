@@ -191,66 +191,3 @@ def test_sentinel_valued_state_is_honored():
     (f2,) = _update((8,), iter([pdf]), fresh)
     assert pd.isna(f2.residual_pico[0])
     assert fresh.get[-1] == 1  # n_seen persisted
-
-
-class _FakeValueState:
-    """Duck-typed v2 ValueState: exists/get/update is all the
-    processor uses."""
-
-    def __init__(self):
-        self._t = None
-
-    def exists(self):
-        return self._t is not None
-
-    def get(self):
-        return self._t
-
-    def update(self, t):
-        self._t = tuple(t)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-
-    def getValueState(self, name, schema):
-        return self.state
-
-
-def test_tws_processor_matches_compat_engine():
-    """Both streaming engines wrap the SAME _fold_events transition;
-    drive the transformWithStateInPandas processor through a
-    duck-typed handle (protobuf-free) and assert it reproduces the
-    prefix reference exactly — the same bar the compat engine's
-    property test holds."""
-    from async_event_streams_spark.streaming.timeseries import (
-        TimeseriesProcessor,
-    )
-
-    events = [(i, (7 * i * i - 300 * i) % 997 - 200) for i in range(1, 60)]
-    proc = TimeseriesProcessor()
-    proc.init(_FakeHandle())
-    frames = []
-    for lo in range(0, len(events), 7):  # 7-event micro-batches
-        batch = events[lo : lo + 7]
-        pdf = pd.DataFrame(
-            {
-                "event_id": [e for e, _ in batch],
-                "x_micro": [x for _, x in batch],
-            }
-        )
-        frames.extend(proc.handleInputRows((7,), iter([pdf])))
-    got = pd.concat(frames, ignore_index=True)
-    rows = [
-        (
-            int(r.event_id), int(r.x_micro), int(r.ewma_pico),
-            None if pd.isna(r.residual_pico) else int(r.residual_pico),
-            int(r.peak_micro), int(r.drawdown_micro),
-            int(r.band_break), int(r.med2_micro),
-        )
-        for r in got.itertuples()
-    ]
-    assert rows == _reference(events)
-    # and byte-for-byte the same outputs as the compat engine
-    assert rows == _run_stream(events, [7] * 8)

@@ -333,3 +333,20 @@ def test_per_event_fidelity_mode_one_segment_per_batch(
         assert nonempty == [[0], [1], [2]]
     finally:
         t.close()
+
+
+def test_post_rejects_lineage_length_mismatch(spark, topic_root, registry):
+    """source_event_ids must pair one id with each row: too few or too
+    many raise ValueError and publish nothing; a matching list lands
+    one id per row."""
+    t = Topic(spark, "lineage_len", "v long", topic_root, registry)
+    rows = [{"v": n} for n in range(4)]
+    for ids in ([10, 11], [10, 11, 12, 13, 14]):
+        with pytest.raises(ValueError, match="source_event_ids"):
+            t.post(rows, source_event_ids=ids)
+    assert t.batch_df().count() == 0
+    t.post(rows, source_event_ids=[10, 11, 12, 13])
+    got = t.batch_df().select("v", "source_event_id").collect()
+    assert sorted((r.v, r.source_event_id) for r in got) == [
+        (0, 10), (1, 11), (2, 12), (3, 13)
+    ]
